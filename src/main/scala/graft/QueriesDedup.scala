@@ -26,114 +26,31 @@ object QueriesDedup {
     *    (and `StringSplit` recompiles its regex per call);
     *  - a bare repartition is no barrier: InferFiltersFromGenerate +
     *    predicate pushdown clone the whole expression tree below it.
-    * `persist()` is the optimizer-proof materialization, and Spark's
-    * CacheManager dedups by plan equality, so d1–d5 share one cached
-    * tokenization per scale dir. The same pattern at 100 TB is
-    * "tokenize once → checkpoint → fan out to every signature".
+    * `persist()` is the optimizer-proof materialization, and the
+    * [[SessionMemo]] entry makes d1–d5 share one cached tokenization per
+    * scale dir. The same pattern at 100 TB is "tokenize once →
+    * checkpoint → fan out to every signature".
     */
-  private[graft] def docsWithTokens(s: SparkSession, d: String): DataFrame = {
-    val df = DedupOps.spread(
+  private[graft] def docsWithTokens(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "dedup.tokens")(DedupOps.spread(
       Tables.documents(s, d)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("toks")))
-    // storageLevel consults the session CacheManager by plan equality, so
-    // re-invocations reuse the existing cache entry instead of stacking
-    // redundant persist() calls ("Asked to cache already cached data"
-    // warnings). Library consumers can drop the cache via [[unpersistAll]].
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
+      .persist())
 
   /** Tokenized docs reduced to their distinct 3-shingle hashes, PERSISTED
-    * (shared by d2 and d3 via CacheManager plan equality). Materializing
-    * the shingle frame matters beyond reuse: `InferFiltersFromGenerate`
-    * clones the generator child into `isnotnull`/`size > 0` predicates
-    * that are pushed below the projection, so an un-cached
-    * `shingleHashes` would be evaluated up to three times per row (plan-
-    * audited); against the cache those predicates read a materialized
-    * array. Same discipline as [[docsWithTokens]] — at 100 TB this is
-    * "signature once → checkpoint → fan out".
+    * (shared by d2 and d3). Materializing the shingle frame matters
+    * beyond reuse: `InferFiltersFromGenerate` clones the generator child
+    * into `isnotnull`/`size > 0` predicates that are pushed below the
+    * projection, so an un-cached `shingleHashes` would be evaluated up
+    * to three times per row (plan-audited); against the cache those
+    * predicates read a materialized array. Same discipline as
+    * [[docsWithTokens]] — at 100 TB this is "signature once →
+    * checkpoint → fan out".
     */
-  private def docsWithShingles(s: SparkSession, d: String): DataFrame = {
-    val df = docsWithTokens(s, d)
+  private def docsWithShingles(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "dedup.shingles")(docsWithTokens(s, d)
       .select(col("doc_id"), DedupOps.shingleHashes(col("toks"), 3).as("sh"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
-
-  /** Guard-persist: consult the CacheManager (plan equality) so repeat
-    * invocations reuse the existing entry instead of stacking persist()
-    * calls — the house discipline of every shared frame below.
-    */
-  private def guardPersist(df: DataFrame): DataFrame =
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-
-  /** Object-identity memo of eagerly-checkpointed derived frames — the
-    * bpeChainMemo discipline applied to the keeper-pair chain: the
-    * dedup-first caches stack six layers of joins, and although
-    * CacheManager plan-equality made every EXECUTION a cached scan,
-    * each invocation still re-ANALYZED the full expansion tree (~0.3 s
-    * of driver-side Catalyst per consumer at any scale — measured: d2,
-    * a pure cached read, ran 0.34 s wall / 0.02 s task). The
-    * localCheckpoint truncates the plan to a LogicalRDD, so consumers
-    * build shallow plans; the memo shares by object identity because a
-    * LogicalRDD cannot be re-found by plan equality. Context-end
-    * cleanup mirrors Tables.resolved.
-    */
-  private val frameMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-  private val memoCleanup =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private def memoChk(s: SparkSession, d: String, name: String)(
-      build: => DataFrame): DataFrame = {
-    if (memoCleanup.compareAndSet(false, true))
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler
-                .SparkListenerApplicationEnd): Unit = {
-            frameMemo.clear()
-            memoCleanup.set(false)
-          }
-        })
-    // get-then-putIfAbsent rather than computeIfAbsent: cache builds
-    // NEST (verified_pairs builds keeper_pairs builds keeper_index...),
-    // and ConcurrentHashMap forbids recursive updates inside a mapping
-    // function. A racing duplicate build is harmless — the loser's
-    // checkpoint blocks are released and the winner is returned.
-    val key = (s, d, name)
-    val existing = frameMemo.get(key)
-    if (existing != null) existing
-    else {
-      val built = build.localCheckpoint()
-      val prev = frameMemo.putIfAbsent(key, built)
-      if (prev == null) built
-      else {
-        built.queryExecution.analyzed.foreach {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(blocking = false)
-          case _ =>
-        }
-        prev
-      }
-    }
-  }
-
-  /** Drop a memoized frame and free its checkpoint blocks explicitly
-    * (the deterministic-release discipline from QueriesText).
-    */
-  private def dropMemo(s: SparkSession, d: String, name: String): Unit =
-    Option(frameMemo.remove((s, d, name))).foreach {
-      _.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-    }
+      .persist())
 
   /** d18's ranked frame BUILD (un-checkpointed): deterministic range
     * buckets from seeded-sampled boundaries (withRangeBuckets — a pure
@@ -167,8 +84,8 @@ object QueriesDedup {
         count(lit(1)).over(Window.partitionBy("part")))
   }
 
-  /** DEDUP-FIRST shared pair machinery (VERDICT r14 #1 — closes the sf5
-    * density failure at its source). The old `pair_intersections` cache
+  /** DEDUP-FIRST shared pair machinery, which removes the sf5 density
+    * failure at its source. The old `pair_intersections` cache
     * ran d2's df-capped intersection chain over the RAW corpus; at
     * adversarial duplicate density (sf5: every doc has 49 exact clones)
     * its Σ df² join intermediate exceeded local spill disk and took
@@ -195,34 +112,39 @@ object QueriesDedup {
     * The raw-corpus form (DedupOps.shingleIntersections) remains the
     * executable spec; DedupFirstCacheSpec pins frame equality on a
     * clone-heavy fixture, and the sf ≤ 1 oracles are unchanged.
+    *
+    * Every layer is eagerly localCheckpointed: the chain stacks six
+    * layers of joins, and a cached-but-untruncated frame would still
+    * re-analyze the whole expansion tree on every consumer invocation.
     */
   private[graft] def cloneMembers(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "clone_members")(DedupOps.cloneMembership(
-      docsWithTokens(s, d), "doc_id", col("toks")))
+    SessionMemo(s, d, "dedup.clone_members")(DedupOps.cloneMembership(
+      docsWithTokens(s, d), "doc_id", col("toks")).localCheckpoint())
 
   private def keeperIndex(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "keeper_index") {
+    SessionMemo(s, d, "dedup.keeper_index") {
       val w = cloneMembers(s, d).groupBy("keeper")
         .agg(count(lit(1)).as("w"))
         .withColumnRenamed("keeper", "doc_id")
       DedupOps.weightedCappedIndex(
         docsWithShingles(s, d).join(w, "doc_id"),
-        "doc_id", "sh", "w", maxDocFreq = 1000L)
+        "doc_id", "sh", "w", maxDocFreq = 1000L).localCheckpoint()
     }
 
   private def keeperPairs(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "keeper_pairs")(
-      DedupOps.pairIntersectionsFromIndex(keeperIndex(s, d)))
+    SessionMemo(s, d, "dedup.keeper_pairs")(
+      DedupOps.pairIntersectionsFromIndex(keeperIndex(s, d))
+        .localCheckpoint())
 
   private def cliqueSelf(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "clique_self") {
+    SessionMemo(s, d, "dedup.clique_self") {
       val copies = cloneMembers(s, d).groupBy("keeper")
         .agg(count(lit(1)).as("copies"))
         .filter(col("copies") >= 2)
       keeperIndex(s, d)
         .groupBy(col("id").as("keeper"), col("n"))
         .agg(count(lit(1)).as("surv"))
-        .join(copies, "keeper")
+        .join(copies, "keeper").localCheckpoint()
     }
 
   /** The raw-corpus pair frame (id_a, id_b, n_a, n_b, inter — exactly
@@ -242,15 +164,15 @@ object QueriesDedup {
       cloneMembers(s, d), pred)
 
   /** The ONE bounded prefix-bucket expansion (verified pairs + minimal
-    * successor offset at B=8), PERSISTED — d29 is its min_off ≤ 2
+    * successor offset at B=8), checkpointed — d29 is its min_off ≤ 2
     * filter and d32 its budget curve, so the expansion+verify cost is
-    * paid once (VERDICT r14 #2a: d32 previously re-expanded at B=8
-    * what d29 had already expanded at B=2).
+    * paid once.
     */
   private def budgetPairs(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "budget_pairs") {
+    SessionMemo(s, d, "dedup.budget_pairs") {
       val (e, buckets) = prefixBucketFrames(s, d)
       DedupOps.prefixVerifiedMinOff(e, buckets, 7, 10, maxB = 8)
+        .localCheckpoint()
     }
 
   /** d33's keeper-corpus prefix front half — the rarity sort +
@@ -267,7 +189,7 @@ object QueriesDedup {
         .select(col("id").as("doc_id")), "doc_id")
     val (e, buckets) = DedupOps.prefixBuckets(keeperSh, "doc_id", "sh",
       7, 10, maxBucket = 1000L)
-    (e, memoChk(s, d, "keeper_prefix_buckets")(buckets))
+    (e, SessionMemo(s, d, "dedup.keeper_buckets")(buckets.localCheckpoint()))
   }
 
   /** MinHash signatures over KEEPERS only, memo-checkpointed — the
@@ -276,12 +198,12 @@ object QueriesDedup {
     * otherwise recompute the signature pass per count branch.
     */
   private def keeperSigs(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "keeper_sigs") {
+    SessionMemo(s, d, "dedup.keeper_sigs") {
       DedupOps.minhashSigs(
         docsWithShingles(s, d)
           .join(cloneMembers(s, d).filter(col("id") === col("keeper"))
             .select(col("id").as("doc_id")), "doc_id"),
-        "doc_id", "sh", 16)
+        "doc_id", "sh", 16).localCheckpoint()
     }
 
   private val jaccardGe08: Column =
@@ -294,7 +216,7 @@ object QueriesDedup {
     * raw-sized materialization is the answer itself.
     */
   private def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    memoChk(s, d, "verified_pairs")(
+    SessionMemo(s, d, "dedup.verified_pairs")(
       // spread: the cross ∪ intra expansion doubles partition count,
       // and the iterative consumers (d7's Pregel, d9's PageRank)
       // symmetrize this frame again — without re-bounding, every round
@@ -302,7 +224,7 @@ object QueriesDedup {
       DedupOps.spread(rawPairsWhere(s, d, jaccardGe08)
         .select(col("id_a"), col("id_b"),
           round(col("inter") / (col("n_a") + col("n_b") - col("inter")), 6)
-            .as("jaccard"))))
+            .as("jaccard"))).localCheckpoint())
 
   /** The prefix-filter front half (shingle index + rarity-ordered
     * prefix buckets at the d17 7/10 threshold), with the BUCKETS
@@ -316,7 +238,7 @@ object QueriesDedup {
       : (DataFrame, DataFrame) = {
     val (e, buckets) = DedupOps.prefixBuckets(docsWithShingles(s, d),
       "doc_id", "sh", 7, 10, maxBucket = 1000L)
-    (e, memoChk(s, d, "prefix_buckets")(buckets))
+    (e, SessionMemo(s, d, "dedup.prefix_buckets")(buckets.localCheckpoint()))
   }
 
   /** d31's body over a tokenized (doc_id, toks) frame: full-token-hash
@@ -385,18 +307,6 @@ object QueriesDedup {
     "dedup.budget_pairs" -> (budgetPairs _),
     "dedup.keeper_buckets" ->
       ((s: SparkSession, d: String) => keeperPrefixFrames(s, d)._2))
-
-  /** Release the shared tokenization/shingle/pair caches (for long-lived
-    * sessions that are done with the dedup query family).
-    */
-  def unpersistAll(s: SparkSession, d: String): Unit = {
-    Seq("keeper_prefix_buckets", "budget_pairs", "prefix_buckets",
-      "verified_pairs", "keeper_sigs", "clique_self", "keeper_pairs",
-      "keeper_index", "clone_members")
-      .foreach(dropMemo(s, d, _))
-    docsWithShingles(s, d).unpersist()
-    docsWithTokens(s, d).unpersist()
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact dedup on a canonicalization (first-5-token prefix hash):
@@ -847,7 +757,7 @@ object QueriesDedup {
       // posexplode keep ReuseExchange from sharing the subtrees —
       // profiled at sf1 as FOUR ~32-task stages of 31-39 task-seconds
       // each, all re-running the gram explode + hash. The EAGER
-      // localCheckpoint (deliberately NOT guard-persisted: a
+      // localCheckpoint (deliberately NOT a SessionMemo entry: a
       // session-lifetime cache would let a later bench pass skip the
       // gram computation — every invocation must compute from the
       // parquet inputs) materializes it once inside this invocation;

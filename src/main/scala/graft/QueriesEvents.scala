@@ -659,61 +659,36 @@ object QueriesEvents {
   )
 
   /** The e11/e14 shared per-user activity frame (recency, frequency,
-    * monetary), PERSISTED with the house idempotent-cache discipline
-    * (CacheManager plan equality dedups re-invocations). Both queries
-    * feed it through the range-partitioned rank machinery, whose
-    * sample/offsets/main branches each re-execute their input lineage
-    * — against the cache those branches read a materialized 1-row-per-
-    * user frame instead of re-running the events aggregate. */
-  private[graft] def rfmUsers(s: SparkSession, d: String): DataFrame = {
-    val df = Tables.events(s, d)
+    * monetary), PERSISTED. Both queries feed it through the
+    * range-partitioned rank machinery, whose sample/offsets/main
+    * branches each re-execute their input lineage — against the cache
+    * those branches read a materialized 1-row-per-user frame instead of
+    * re-running the events aggregate. */
+  private[graft] def rfmUsers(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "events.rfm_users")(Tables.events(s, d)
       .groupBy("user_id")
       .agg(max(to_date(col("ts"))).as("last_day"),
         count(lit(1)).as("freq"),
         sum(floor(col("value") * 100).cast("long")).as("cents"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
+      .persist())
 
-  /** (session, dir) memo of the ranked frame's eager localCheckpoint —
-    * the QueriesDedup.memoChk discipline: CacheManager plan-equality
-    * reuse would re-ANALYZE the window+broadcast pipeline per
-    * consumer invocation; the checkpointed LogicalRDD shared by object
-    * identity costs nothing to reference.
+  /** The e11/e14 shared STACKED-RANK frame, eagerly localCheckpointed
+    * (a plan-equality cache would still re-analyze the window+broadcast
+    * pipeline per consumer invocation; the checkpointed LogicalRDD costs
+    * nothing to reference). One range-partitioned prefix pipeline
+    * ranks all three RFM metric orders AND carries the f-metric's
+    * running event sum, so e11's quintile labels and e14's Pareto reach
+    * both read a materialized frame instead of each paying the
+    * sample/offsets/main branches of their own rank pipeline per run.
+    * Columns: (user_id, m ∈ {r,f,m}, rk, cum, n_total, total_f) where
+    * rk is the 1-indexed rank within metric m's descending order
+    * (user_id tiebreak) and cum is the inclusive running sum of `freq`
+    * in that order (meaningful for m='f', e14's cumulative-events
+    * curve; harmless for the others).
     */
-  private val rankedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
-
-  /** The e11/e14 shared STACKED-RANK frame (VERDICT r15 #5 — fold
-    * e14's separate prefix pass into e11's machinery): one
-    * range-partitioned prefix pipeline ranks all three RFM metric
-    * orders AND carries the f-metric's running event sum, so e11's
-    * quintile labels and e14's Pareto reach both read a materialized
-    * frame instead of each paying the sample/offsets/main branches of
-    * their own rank pipeline per run. Columns: (user_id, m ∈ {r,f,m},
-    * rk, cum, n_total, total_f) where rk is the 1-indexed rank within
-    * metric m's descending order (user_id tiebreak) and cum is the
-    * inclusive running sum of `freq` in that order (meaningful for
-    * m='f', e14's cumulative-events curve; harmless for the others).
-    */
-  private[graft] def rfmRanked(s: SparkSession, d: String): DataFrame = {
-    val key = (s, d)
-    val existing = rankedMemo.get(key)
-    if (existing != null) return existing
-    val built = rfmRankedPlan(s, d).localCheckpoint()
-    val prev = rankedMemo.putIfAbsent(key, built)
-    if (prev == null) built
-    else {
-      built.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-      prev
-    }
-  }
+  private[graft] def rfmRanked(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "events.rfm_ranked")(
+      rfmRankedPlan(s, d).localCheckpoint())
 
   /** The raw (un-checkpointed) build pipeline of [[rfmRanked]] — split
     * out so PlanAuditSpec can pin the build's physical properties
@@ -757,42 +732,41 @@ object QueriesEvents {
     * 100 TB this frame (≤ (types+2)² rows) is the entire residue of
     * the corpus scan.
     */
-  private def markovEdges(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val rn = Tables.events(s, d)
-      .select(col("user_id"), col("event_type"), col("ts"),
-        col("event_id"))
-      .withColumn("rn", row_number().over(w))
-    val firstP = rn.groupBy("user_id").agg(
-      min(when(col("event_type") === "purchase", col("rn"))).as("prn"),
-      max(col("rn")).as("mxall"))
-    val j = rn.join(firstP, Seq("user_id"))
-      .withColumn("lastrn", coalesce(col("prn"), col("mxall")))
-      .filter(col("rn") <= col("lastrn"))
-      .select(col("user_id"),
-        when(col("event_type") === "purchase", lit("(conv)"))
-          .otherwise(col("event_type")).as("st"),
-        col("rn"), col("lastrn"))
-    val wf = Window.partitionBy("user_id").orderBy(col("rn"))
-    val withPrev = j.withColumn("prev", lag(col("st"), 1).over(wf))
-    val edges = withPrev.filter(col("prev").isNull)
-      .select(lit("(start)").as("i"), col("st").as("j"))
-      .unionAll(withPrev.filter(col("prev").isNotNull)
-        .select(col("prev").as("i"), col("st").as("j")))
-      .unionAll(withPrev
-        .filter(col("rn") === col("lastrn") && col("st") =!= "(conv)")
-        .select(col("st").as("i"), lit("(null)").as("j")))
-    val n = edges.groupBy("i", "j").agg(count(lit(1)).as("nij"))
-    val ni = n.groupBy("i").agg(sum(col("nij")).as("ni"))
-    val df = n.join(ni, Seq("i"))
-      .select(col("i"), col("j"),
-        (col("nij").cast("double") / col("ni").cast("double")).as("p"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
+  private def markovEdges(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "events.markov_edges") {
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("user_id")
+        .orderBy(col("ts").asc, col("event_id").asc)
+      val rn = Tables.events(s, d)
+        .select(col("user_id"), col("event_type"), col("ts"),
+          col("event_id"))
+        .withColumn("rn", row_number().over(w))
+      val firstP = rn.groupBy("user_id").agg(
+        min(when(col("event_type") === "purchase", col("rn"))).as("prn"),
+        max(col("rn")).as("mxall"))
+      val j = rn.join(firstP, Seq("user_id"))
+        .withColumn("lastrn", coalesce(col("prn"), col("mxall")))
+        .filter(col("rn") <= col("lastrn"))
+        .select(col("user_id"),
+          when(col("event_type") === "purchase", lit("(conv)"))
+            .otherwise(col("event_type")).as("st"),
+          col("rn"), col("lastrn"))
+      val wf = Window.partitionBy("user_id").orderBy(col("rn"))
+      val withPrev = j.withColumn("prev", lag(col("st"), 1).over(wf))
+      val edges = withPrev.filter(col("prev").isNull)
+        .select(lit("(start)").as("i"), col("st").as("j"))
+        .unionAll(withPrev.filter(col("prev").isNotNull)
+          .select(col("prev").as("i"), col("st").as("j")))
+        .unionAll(withPrev
+          .filter(col("rn") === col("lastrn") && col("st") =!= "(conv)")
+          .select(col("st").as("i"), lit("(null)").as("j")))
+      val n = edges.groupBy("i", "j").agg(count(lit(1)).as("nij"))
+      val ni = n.groupBy("i").agg(sum(col("nij")).as("ni"))
+      n.join(ni, Seq("i"))
+        .select(col("i"), col("j"),
+          (col("nij").cast("double") / col("ni").cast("double")).as("p"))
+        .persist()
+    }
 
   /** This family's shared persisted caches (the QueriesDedup.sharedCaches
     * contract: name → builder, pre-built and timed separately by Bench
@@ -803,18 +777,6 @@ object QueriesEvents {
     "events.rfm_users" -> (rfmUsers _),
     "events.rfm_ranked" -> (rfmRanked _),
     "events.markov_edges" -> (markovEdges _))
-
-  def unpersistAll(s: SparkSession, d: String): Unit = {
-    rfmUsers(s, d).unpersist()
-    Option(rankedMemo.remove((s, d))).foreach {
-      _.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-    }
-    markovEdges(s, d).unpersist()
-  }
 
   /** The e6/e7 shared sessionization frame: gap>30min boundaries via
     * lag + running boundary count, both windows on ONE user_id

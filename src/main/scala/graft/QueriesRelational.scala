@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.RelationalOps
-import graft.sources.Tables
+import graft.sources.{ParquetTableSource, Tables}
 
 /** Window / top-k / set-op / multi-join / grouping queries — the SURVEY.md
   * §2.7 categories absent from the reference, filled with oracle-checkable
@@ -637,14 +637,17 @@ object QueriesRelational {
       // former 64: the map count only needs to exceed the chunks the
       // hot partition splits into, and at this scale the extra 48 map
       // tasks were pure scheduling floor — half the query's cost).
-      val li = Tables.lineitem(s, d)
+      // The forked session is per invocation, so its tables are read
+      // directly: a SessionMemo entry for it could never be hit again
+      // and would pin the session until the context stops.
+      val li = ParquetTableSource(d, "lineitem").load(s)
         .filter(col("l_linenumber") === 1)
         .select(
           when(col("l_orderkey") % 3 === 0, lit(1L))
             .otherwise(col("l_orderkey")).as("skew_key"),
           col("l_extendedprice"))
         .repartition(16, col("l_extendedprice"))
-      val ord = Tables.orders(s, d)
+      val ord = ParquetTableSource(d, "orders").load(s)
         .select(col("o_orderkey").as("skew_key"), col("o_orderpriority"))
       li.hint("MERGE").join(ord, Seq("skew_key"))
         .groupBy((col("skew_key") % 8).as("bucket"))

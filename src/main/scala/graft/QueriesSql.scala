@@ -255,22 +255,18 @@ object QueriesSql {
       sqlSession(s, d, "lineitem").sql(QueriesMl.oracle("ml1_ols"))),
 
     "sql15_reset_binpack" -> ((s, d) => {
-      // Materialize the ~80-row month-file frame ONCE (guard-persist —
-      // Spark's cache manager dedups by logical plan, so repeat calls
-      // reuse it): the recursion's per-level join must read an
-      // in-memory 80-row relation, not re-scan and re-aggregate
-      // lineitem 80 times (the uncached form measured 26 s at
-      // sf0.01; cached it is sub-second per level).
-      val files = sqlSession(s, d, "lineitem").sql(
+      // Materialize the ~80-row month-file frame ONCE per session and
+      // dir: the recursion's per-level join must read an in-memory
+      // 80-row relation, not re-scan and re-aggregate lineitem 80
+      // times (the uncached form measured 26 s at sf0.01; cached it
+      // is sub-second per level).
+      SessionMemo(s, d, "sql.sql15_files")(sqlSession(s, d, "lineitem").sql(
         """SELECT month, est, CAST(row_number() OVER (ORDER BY month)
           |  AS BIGINT) AS rk
           |FROM (SELECT date_trunc('month', l_shipdate) AS month,
           |    count(*) * 64 AS est
-          |  FROM lineitem GROUP BY 1)""".stripMargin)
-      if (files.storageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE)
-        files.persist()
-      files.createOrReplaceTempView("graft_sql15_files")
+          |  FROM lineitem GROUP BY 1)""".stripMargin).persist())
+        .createOrReplaceTempView("graft_sql15_files")
       s.sql(
         """WITH RECURSIVE f AS (
           |  SELECT month, est, rk FROM graft_sql15_files),

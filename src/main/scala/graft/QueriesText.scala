@@ -522,7 +522,7 @@ object QueriesText {
     // and the merge itself is an `aggregate` fold over each symbol
     // array (seed [syms[0]]; append, or replace the tail element when
     // (last, next) equals the winner — exactly BPE's left-to-right
-    // non-overlapping rule). Each round's vocab is guard-persisted so
+    // non-overlapping rule). Each round's vocab is checkpointed so
     // the two consumers per round (pair counts + next merge) read one
     // materialization instead of doubling the lineage. Output: the
     // merge table itself — round, pair, weighted frequency.
@@ -535,7 +535,7 @@ object QueriesText {
     // actually fires (training on the full corpus would make every
     // observed trigram a model hit and the backoff dead code). Model
     // tables are vocab-bounded aggregates (the x21/x23 discipline);
-    // c1/c2 are guard-persisted because each is joined twice (prefix
+    // c1/c2 are persisted because each is joined twice (prefix
     // and suffix legs). S(w3|w1,w2) = c3/c2(w1w2), else 0.4·c2(w2w3)/
     // c1(w2), else 0.16·laplace(w3); ln is rounded to 9dp BEFORE the
     // sorted fold (ln is not IEEE-correctly-rounded, so the fold input
@@ -547,8 +547,8 @@ object QueriesText {
       val train = srcs.groupBy("source").agg(count(lit(1)).as("nd"))
         .orderBy(col("nd").desc, col("source")).limit(1)
         .select(col("source").as("train_src"))
-      val c1 = lmUnigrams(trainToks(s, d))
-      val c2 = lmBigrams(trainToks(s, d))
+      val c1 = lmUnigrams(s, d)
+      val c2 = lmBigrams(s, d)
       val stats = c1.agg(sum(col("c1")).as("ntok"),
         count(lit(1)).as("vsz"))
       val tg = QueriesDedup.docsWithTokens(s, d)
@@ -600,8 +600,8 @@ object QueriesText {
     // Trained-tokenizer ENCODE — the apply half of x35's train loop:
     // every corpus word re-segments under the trained merges (the
     // final vocab of the SAME persisted chain — train once, encode
-    // everywhere; CacheManager plan equality makes x35 and x37 read
-    // one materialization). The per-source ledger reports what the
+    // everywhere; the shared chain makes x35 and x37 read one
+    // materialization). The per-source ledger reports what the
     // tokenizer actually buys: words, characters, BPE tokens, tokens
     // per word (TRAINED fertility — x28 measures the regex-subtoken
     // proxy; this is the real thing) and chars per token. The encode
@@ -611,7 +611,7 @@ object QueriesText {
     // any scale — exactly how a 100 TB corpus is tokenized against a
     // trained merges table.
     "x37_bpe_encode" -> ((s, d) => {
-      val enc = bpeChain(s, d)._1
+      val enc = bpeVocab(s, d, BpeRounds)
         .select(col("word"), size(col("syms")).cast("long").as("ntok"))
       val srcs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"))
@@ -707,171 +707,97 @@ object QueriesText {
     */
   private val BpeWordRe = "^[a-z]{1,16}$"
 
-  /** The shared x35/x37 training chain: vocab build + [[BpeRounds]]
-    * in-plan merge rounds, with `word` carried through every round so
-    * the trained segmentation can be joined back to the corpus (x37's
-    * encode pass). Each round's vocab is guard-persisted (tfFrame
-    * pattern) — without it the pair-count branch and the merge branch
-    * would each re-derive the whole previous-round chain, doubling
-    * work per round (2^R overall); the plan-equality guard also means
-    * x35 and x37 share ONE materialized chain per scale dir.
-    * Returns (final vocab (word, syms, freq), merge-rounds table).
+  /** The shared x35/x37 training chain: round r's vocab (word, syms,
+    * freq) after r in-plan merge rounds (round 0 is the unmerged
+    * character split), with `word` carried through every round so the
+    * trained segmentation can be joined back to the corpus (x37's
+    * encode pass). Each round is eagerly localCheckpointed and
+    * shared through [[SessionMemo]]: round r's plan references round
+    * r−1 twice (once in the pair-count argmax, once in the merge fold),
+    * so an un-truncated chain DOUBLES per round and every x35/x37 call
+    * would re-analyze a 2^R-copy tree. The checkpoint keeps each plan a
+    * constant-size LogicalRDD, and the eager build lands the whole
+    * ladder on the first caller (or the `text.bpe_chain` cache line).
+    * localCheckpoint is the single-process form; a resilient cluster
+    * deployment would use checkpoint() to durable storage — same
+    * shape, same truncation.
     */
-  private def bpeChain(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    val (frames, rounds) = bpeChainFrames(s, d)
-    (frames.last, rounds)
-  }
-
-  /** The chain memo: x35 and x37 share the SAME frame objects per
-    * (session, scale dir). Sharing used to ride CacheManager
-    * plan-equality (guard-persist), but the chain's analyzed plan
-    * DOUBLES per round — round r's vocab references round r−1 twice
-    * (once in the pair-count argmax, once in the merge fold), so each
-    * invocation re-ANALYZED a 2^R-copy tree (~6 s of pure Catalyst
-    * analysis per x35/x37 call at ANY scale, measured: the x37 plan
-    * rendered 414 nested InMemoryRelations). The fix is the
-    * connectedComponents discipline: eagerly localCheckpoint each
-    * round (constant-size LogicalRDD plans) and share by OBJECT
-    * IDENTITY through this memo, since a LogicalRDD can't be found by
-    * plan equality. localCheckpoint is the single-process form; a
-    * resilient cluster deployment would use checkpoint() to durable
-    * storage — same shape, same truncation.
-    */
-  private val bpeChainMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (Seq[DataFrame], DataFrame)]()
-
-  /** The memo's keys hold SparkSessions strongly; without this, a
-    * session stopped without [[unpersistAll]] would pin its entry (and
-    * the session object) for the life of the JVM (ADVICE r14). One
-    * context-wide listener clears the memo at application end — the
-    * lifetime that actually bounds checkpoint blocks, since stopping
-    * the context drops the block manager anyway.
-    */
-  private val memoCleanupRegistered =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private def ensureMemoCleanup(s: SparkSession): Unit =
-    if (memoCleanupRegistered.compareAndSet(false, true))
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler
-                .SparkListenerApplicationEnd): Unit = {
-            bpeChainMemo.clear()
-            memoCleanupRegistered.set(false)
-          }
-        })
-
-  private def bpeChainFrames(s: SparkSession, d: String)
-      : (Seq[DataFrame], DataFrame) = {
-    ensureMemoCleanup(s)
-    bpeChainMemo.computeIfAbsent((s, d),
-      _ => buildBpeChainFrames(s, d))
-  }
-
-  private def buildBpeChainFrames(s: SparkSession, d: String)
-      : (Seq[DataFrame], DataFrame) = {
-    val persistedFrames = Seq.newBuilder[DataFrame]
-    // eager lineage cut: materializes NOW (so the whole ladder build
-    // lands on the [bench-cache] line / first caller, never split
-    // across consumers) and truncates the plan to a LogicalRDD
-    def persisted(df: DataFrame): DataFrame = {
-      val out = df.localCheckpoint()
-      persistedFrames += out
-      out
+  private def bpeVocab(s: SparkSession, d: String, r: Int): DataFrame =
+    SessionMemo(s, d,
+        if (r == BpeRounds) "text.bpe_chain" else s"text.bpe_round$r") {
+      if (r == 0)
+        QueriesDedup.docsWithTokens(s, d)
+          .select(explode(col("toks")).as("tok"))
+          .select(lower(col("tok")).as("word"))
+          .filter(col("word").rlike(BpeWordRe))
+          .groupBy("word").agg(count(lit(1)).as("freq"))
+          .select(col("word"),
+            transform(sequence(lit(1), length(col("word"))),
+              i => col("word").substr(i, lit(1))).as("syms"), col("freq"))
+          .localCheckpoint()
+      else {
+        // Exhaustion guard: when no pair remains (tiny/degenerate corpus
+        // trained past its merge capacity), `top` is EMPTY and a bare
+        // cross join would empty the vocab — x35's rounds table just
+        // loses its row (correct), but x37's encode would lose the whole
+        // segmentation. The NULL sentinel (pf = −1, outranked by any
+        // real pair) turns the merge fold into a no-op: NULL = x is
+        // NULL, so every element takes the append branch.
+        val topOrNoop = bpeTop(s, d, r).unionAll(s.range(1).select(
+            lit(null).cast("string").as("l"),
+            lit(null).cast("string").as("r"), lit(-1L).as("pf")))
+          .orderBy(col("pf").desc).limit(1)
+        bpeVocab(s, d, r - 1).crossJoin(broadcast(topOrNoop))
+          .select(col("word"), aggregate(
+            slice(col("syms"), lit(2), size(col("syms")) - 1),
+            slice(col("syms"), lit(1), lit(1)),
+            (acc, x) => when(
+              element_at(acc, -1) === col("l") && x === col("r"),
+              concat(slice(acc, lit(1), size(acc) - 1),
+                array(concat(col("l"), col("r")))))
+              .otherwise(concat(acc, array(x)))).as("syms"),
+            col("freq"))
+          .localCheckpoint()
+      }
     }
-    var vocab = persisted(QueriesDedup.docsWithTokens(s, d)
-      .select(explode(col("toks")).as("tok"))
-      .select(lower(col("tok")).as("word"))
-      .filter(col("word").rlike(BpeWordRe))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(col("word"),
-        transform(sequence(lit(1), length(col("word"))),
-          i => col("word").substr(i, lit(1))).as("syms"), col("freq")))
-    val rounds = (1 to BpeRounds).map { r =>
-      val top = vocab.filter(size(col("syms")) >= 2)
-        .select(col("freq"), explode(zip_with(
-          slice(col("syms"), lit(1), size(col("syms")) - 1),
-          slice(col("syms"), lit(2), size(col("syms")) - 1),
-          (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("pf"))
-        .orderBy(col("pf").desc, col("l"), col("r")).limit(1)
-      // Exhaustion guard: when no pair remains (tiny/degenerate corpus
-      // trained past its merge capacity), `top` is EMPTY and a bare
-      // cross join would empty the vocab — x35's rounds table just
-      // loses its row (correct), but x37's encode would lose the whole
-      // segmentation. The NULL sentinel (pf = −1, outranked by any
-      // real pair) turns the merge fold into a no-op: NULL = x is
-      // NULL, so every element takes the append branch.
-      val topOrNoop = top.unionAll(s.range(1).select(
-          lit(null).cast("string").as("l"),
-          lit(null).cast("string").as("r"), lit(-1L).as("pf")))
-        .orderBy(col("pf").desc).limit(1)
-      vocab = persisted(vocab.crossJoin(broadcast(topOrNoop))
-        .select(col("word"), aggregate(
-          slice(col("syms"), lit(2), size(col("syms")) - 1),
-          slice(col("syms"), lit(1), lit(1)),
-          (acc, x) => when(
-            element_at(acc, -1) === col("l") && x === col("r"),
-            concat(slice(acc, lit(1), size(acc) - 1),
-              array(concat(col("l"), col("r")))))
-            .otherwise(concat(acc, array(x)))).as("syms"),
-          col("freq")))
-      top.select(lit(r.toLong).as("merge_round"), col("l").as("lhs"),
-        col("r").as("rhs"), col("pf").as("pair_freq"))
-    }
-    (persistedFrames.result(), rounds.reduce(_ unionAll _))
-  }
 
+  /** Round r's merge (l, r, pf): the most frequent adjacent symbol
+    * pair of round r−1's vocab, empty once no pair remains.
+    */
+  private def bpeTop(s: SparkSession, d: String, r: Int): DataFrame =
+    bpeVocab(s, d, r - 1).filter(size(col("syms")) >= 2)
+      .select(col("freq"), explode(zip_with(
+        slice(col("syms"), lit(1), size(col("syms")) - 1),
+        slice(col("syms"), lit(2), size(col("syms")) - 1),
+        (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum(col("freq")).as("pf"))
+      .orderBy(col("pf").desc, col("l"), col("r")).limit(1)
+
+  /** x35's merge-rounds table: each round's winning pair. */
   private def bpeMerges(s: SparkSession, d: String): DataFrame =
-    bpeChain(s, d)._2
+    (1 to BpeRounds).map { r =>
+      bpeTop(s, d, r).select(lit(r.toLong).as("merge_round"),
+        col("l").as("lhs"), col("r").as("rhs"), col("pf").as("pair_freq"))
+    }.reduce(_ unionAll _)
 
   /** This family's shared persisted caches (the QueriesDedup.sharedCaches
     * contract: name → builder in dependency order, pre-built and timed
     * separately by Bench so per-query times are net of cache). The BPE
-    * entry returns the FINAL vocab frame — forcing it materializes the
-    * whole guard-persisted ladder transitively, which is the expensive
-    * part shared by x35/x37.
+    * entry returns the FINAL vocab frame — building it checkpoints the
+    * whole ladder, which is the expensive part shared by x35/x37.
     */
   private[graft] def sharedCaches
       : Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "text.tf" -> (tfFrame _),
     "text.bigrams" -> (bg2Frame _),
-    "text.bpe_chain" -> ((s: SparkSession, d: String) => bpeChain(s, d)._1),
-    "text.lm_unigrams" ->
-      ((s: SparkSession, d: String) => lmUnigrams(trainToks(s, d))),
-    "text.lm_bigrams" ->
-      ((s: SparkSession, d: String) => lmBigrams(trainToks(s, d))))
-
-  /** Release this family's shared caches — the BPE vocab ladder (one
-    * checkpointed frame per round) and x36's c1/c2 model tables — for
-    * long-lived sessions done with the text queries (the house
-    * unpersistAll discipline). The removed memo entry's checkpointed
-    * frames have their underlying RDD blocks unpersisted EXPLICITLY
-    * (ADVICE r14: relying on GC + ContextCleaner made storage release
-    * nondeterministic — a long-lived session could hold every round's
-    * blocks until a full GC).
-    */
-  def unpersistAll(s: SparkSession, d: String): Unit = {
-    Option(bpeChainMemo.remove((s, d))).foreach { case (frames, _) =>
-      frames.foreach { f =>
-        f.queryExecution.analyzed.foreach {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(blocking = false)
-          case _ =>
-        }
-      }
-    }
-    lmUnigrams(trainToks(s, d)).unpersist()
-    lmBigrams(trainToks(s, d)).unpersist()
-  }
+    "text.bpe_chain" ->
+      ((s: SparkSession, d: String) => bpeVocab(s, d, BpeRounds)),
+    "text.lm_unigrams" -> (lmUnigrams _),
+    "text.lm_bigrams" -> (lmBigrams _))
 
   /** x36's training corpus: token arrays of the largest source (docs
-    * desc, source asc tiebreak) — extracted so [[unpersistAll]] can
-    * re-derive the c1/c2 cache plans.
+    * desc, source asc tiebreak).
     */
   private def trainToks(s: SparkSession, d: String): DataFrame = {
     val srcs = Tables.documents(s, d).select(col("doc_id"), col("source"))
@@ -885,28 +811,22 @@ object QueriesText {
   }
 
   /** Train-corpus n-gram model tables for x36 — c1/c2 are joined twice
-    * each (prefix and suffix legs), so both are guard-persisted.
+    * each (prefix and suffix legs), so both are persisted.
     */
-  private def lmUnigrams(trainToks: DataFrame): DataFrame = {
-    val df = trainToks.select(explode(col("toks")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
+  private def lmUnigrams(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "text.lm_unigrams")(trainToks(s, d)
+      .select(explode(col("toks")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c1")).persist())
 
-  private def lmBigrams(trainToks: DataFrame): DataFrame = {
-    val df = trainToks.filter(size(col("toks")) >= 2)
+  private def lmBigrams(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "text.lm_bigrams")(trainToks(s, d)
+      .filter(size(col("toks")) >= 2)
       .select(explode(zip_with(
         slice(col("toks"), lit(1), size(col("toks")) - 1),
         slice(col("toks"), lit(2), size(col("toks")) - 1),
         (a, b) => struct(a.as("wa"), b.as("wb")))).as("p"))
       .groupBy(col("p.wa").as("wa"), col("p.wb").as("wb"))
-      .agg(count(lit(1)).as("c2"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
+      .agg(count(lit(1)).as("c2")).persist())
 
   private def lmTrigrams(trainToks: DataFrame): DataFrame =
     trainToks.filter(size(col("toks")) >= 3)
@@ -1122,9 +1042,9 @@ object QueriesText {
           .as("chunk_hash"))
 
   /** Per-document term frequencies, PERSISTED (the docsWithTokens house
-    * pattern: CacheManager plan-equality makes re-invocations reuse the
-    * entry). The `tf` subtree feeds BOTH branches of x8's term join —
-    * the tf rows themselves and the df aggregate over them — and
+    * pattern, shared through [[SessionMemo]]). The `tf` subtree feeds
+    * BOTH branches of x8's term join — the tf rows themselves and the
+    * df aggregate over them — and
     * `ReuseExchange` only deduplicates identical exchanges by luck of
     * physical planning; the cache makes the reuse structural, so
     * tokenize + explode + count runs ONCE per scale dir and the join
@@ -1134,14 +1054,10 @@ object QueriesText {
     * 100 TB this is the same "aggregate once → checkpoint → fan out"
     * discipline as the signature frames.
     */
-  private def tfFrame(s: SparkSession, d: String): DataFrame = {
-    val df = QueriesDedup.docsWithTokens(s, d)
+  private def tfFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "text.tf")(QueriesDedup.docsWithTokens(s, d)
       .select(col("doc_id"), explode(col("toks")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")).persist())
 
   /** Per-document bigram frequencies, PERSISTED (the tfFrame pattern at
     * bigram granularity): the in-row zip of the token array with its
@@ -1149,18 +1065,14 @@ object QueriesText {
     * tables (c2/c1) plus its per-doc join all read this one
     * materialization.
     */
-  private def bg2Frame(s: SparkSession, d: String): DataFrame = {
-    val df = QueriesDedup.docsWithTokens(s, d)
+  private def bg2Frame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "text.bigrams")(QueriesDedup.docsWithTokens(s, d)
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(zip_with(
         slice(col("toks"), lit(1), size(col("toks")) - 1),
         slice(col("toks"), lit(2), size(col("toks")) - 1),
         (a, b) => concat(a, lit(" "), b))).as("bg"))
-      .groupBy("doc_id", "bg").agg(count(lit(1)).as("tf2"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
+      .groupBy("doc_id", "bg").agg(count(lit(1)).as("tf2")).persist())
 
   private val enList = "['the','a','and','of','to','in','is']"
   private val deList = "['der','die','das','und','ist','ein']"
@@ -1227,7 +1139,7 @@ object QueriesText {
     * accumulators but folds LIST state correctly; elements arrive as
     * 1-element lists so the lambda signature stays LIST→LIST).
     */
-  /** The shared x35/x37 oracle chain (mirrors [[bpeChain]]: word is
+  /** The shared x35/x37 oracle chain (mirrors [[bpeVocab]]: word is
     * carried through every round so x37's encode join can read
     * v[[BpeRounds]]). v$r CTEs are MATERIALIZED — each is referenced
     * by both the next round's pair count and its merge fold, and

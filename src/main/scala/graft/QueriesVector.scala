@@ -29,20 +29,16 @@ object QueriesVector {
   private val PqCodes = 16
 
   /** Prepared corpus (widened vectors + precomputed norms), PERSISTED —
-    * the docsWithTokens house pattern: CacheManager plan equality makes
-    * every v-family query reuse one materialized prep per scale dir
-    * instead of re-widening and re-norming the embeddings per query
-    * (v8 alone consumes the frame five times across its three
-    * searches). At 100 TB this is the standard "prepare once →
-    * checkpoint → fan out to every index build" discipline.
+    * the docsWithTokens house pattern: every v-family query reuses one
+    * materialized prep per scale dir instead of re-widening and
+    * re-norming the embeddings per query (v8 alone consumes the frame
+    * five times across its three searches). At 100 TB this is the
+    * standard "prepare once → checkpoint → fan out to every index
+    * build" discipline.
     */
-  private def prep(s: SparkSession, d: String): DataFrame = {
-    val df = VectorOps.prepared(Tables.embeddings(s, d), "vec_id",
-      "embedding")
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
+  private def prep(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "vector.prep")(VectorOps.prepared(
+      Tables.embeddings(s, d), "vec_id", "embedding").persist())
 
   /** d23's cell-assigned corpus (id, cid, v, n2), PERSISTED with the
     * prep discipline: the deterministic k-means routing chain (two
@@ -56,29 +52,27 @@ object QueriesVector {
     * d23 dedups within rk=1 cells; d24's multi-probe arm admits both
     * ranks — one cached routing serves the whole curve (v19's
     * route-once discipline). */
-  private def semdedupCells(s: SparkSession, d: String): DataFrame = {
-    val pts = prep(s, d).select(col("id"), col("v"))
-    // K scales with the corpus (target cell ≈ 312 vectors, floor 16)
-    // so the in-cell pair join stays ~quadratic-in-a-CONSTANT at any
-    // scale — a fixed K would grow cells linearly and the join
-    // quadratically. Derived IN-PLAN (broadcast 1-row count, no
-    // action at query-build time — the d6 lesson); integer div keeps
-    // K identical across engines, and at sf0.01/sf0.1 it lands on
-    // exactly the original 16.
-    val kk = pts.agg(greatest(lit(16L),
-      expr("count(1) div 312")).as("kk"))
-    val cent0 = pts.crossJoin(broadcast(kk))
-      .filter(col("id") < col("kk"))
-      .select(col("id").as("cid"), col("v").as("c"))
-    val routed = VectorOps.assignTopKEuclid(pts,
-      VectorOps.centroidMeans(
-        VectorOps.assignNearestEuclid(pts, cent0)), 2)
-    val df = routed.select(col("id"), col("cid"), col("rk"), col("v"),
-      VectorOps.norm2(col("v")).as("n2"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
+  private def semdedupCells(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "vector.semdedup_cells") {
+      val pts = prep(s, d).select(col("id"), col("v"))
+      // K scales with the corpus (target cell ≈ 312 vectors, floor 16)
+      // so the in-cell pair join stays ~quadratic-in-a-CONSTANT at any
+      // scale — a fixed K would grow cells linearly and the join
+      // quadratically. Derived IN-PLAN (broadcast 1-row count, no
+      // action at query-build time — the d6 lesson); integer div keeps
+      // K identical across engines, and at sf0.01/sf0.1 it lands on
+      // exactly the original 16.
+      val kk = pts.agg(greatest(lit(16L),
+        expr("count(1) div 312")).as("kk"))
+      val cent0 = pts.crossJoin(broadcast(kk))
+        .filter(col("id") < col("kk"))
+        .select(col("id").as("cid"), col("v").as("c"))
+      val routed = VectorOps.assignTopKEuclid(pts,
+        VectorOps.centroidMeans(
+          VectorOps.assignNearestEuclid(pts, cent0)), 2)
+      routed.select(col("id"), col("cid"), col("rk"), col("v"),
+        VectorOps.norm2(col("v")).as("n2")).persist()
+    }
 
   /** d23/d24's cell-local near-dup pairs at probe depth `np` (shared
     * cell among each side's top-np routed cells), as (cid, ia, ib)
@@ -124,40 +118,29 @@ object QueriesVector {
 
   /** v19's routed cosine pairs, PERSISTED with the prep discipline:
     * all three nprobe arms are rk-filters over this ONE cosine join,
-    * so uncached it would re-execute once per arm. Guard-persisted
-    * (storageLevel check) and released in [[unpersistAll]] — the
-    * previous in-closure persist leaked the cache entry for the
-    * session's lifetime. */
-  private def v19Pairs(s: SparkSession, d: String): DataFrame = {
-    val df = v19CorpusCells(s, d)
+    * so uncached it would re-execute once per arm. */
+  private def v19Pairs(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "vector.v19_pairs")(v19CorpusCells(s, d)
       .join(broadcast(v19Routed(s, d)), Seq("centroid_id"))
       .filter(col("id_q") =!= col("id_n"))
       .withColumn("cos", round(VectorOps.cosineFromParts(
         VectorOps.dot(col("v_q"), col("v_n")),
         col("n2_q"), col("n2_n")), 6))
-      .select(col("id_q"), col("id_n"), col("rk"), col("cos"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
+      .select(col("id_q"), col("id_n"), col("rk"), col("cos")).persist())
 
-  /** v14/v21's PQ-encoded corpus (id_n, codes), PERSISTED (OPT r19,
-    * VERDICT r18 #3): the encode — subs·codes·subDim fused multiply-
-    * adds per corpus row — is the ADC search's dominant scan cost, and
-    * v21 re-runs v14 as its subject by gate contract, so uncached it
-    * executed once per consumer. A named cache line attributes the
-    * build once (Bench times it on its own `[bench-cache]` line), the
-    * same discipline as `vector.semdedup_cells`.
+  /** v14/v21's PQ-encoded corpus (id_n, codes), PERSISTED: the encode —
+    * subs·codes·subDim fused multiply-adds per corpus row — is the ADC
+    * search's dominant scan cost, and v21 re-runs v14 as its subject by
+    * gate contract, so uncached it executed once per consumer. A named
+    * cache line attributes the build once (Bench times it on its own
+    * `[bench-cache]` line), the same discipline as
+    * `vector.semdedup_cells`.
     */
-  private def pqCodes(s: SparkSession, d: String): DataFrame = {
-    val df = prep(s, d).select(col("id").as("id_n"),
-      VectorOps.pqEncode(
+  private def pqCodes(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "vector.pq_codes")(prep(s, d)
+      .select(col("id").as("id_n"), VectorOps.pqEncode(
         VectorOps.pqDistances(col("v"), PqSubs, PqCodes, Dim))
-        .as("codes"))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist()
-    else df
-  }
+        .as("codes")).persist())
 
   /** This family's shared persisted caches (the QueriesDedup.sharedCaches
     * contract: name → builder in dependency order, pre-built and timed
@@ -169,16 +152,6 @@ object QueriesVector {
     "vector.semdedup_cells" -> (semdedupCells _),
     "vector.v19_pairs" -> (v19Pairs _),
     "vector.pq_codes" -> (pqCodes _))
-
-  /** Release the shared prep cache (for long-lived sessions done with
-    * the similarity-search family).
-    */
-  def unpersistAll(s: SparkSession, d: String): Unit = {
-    prep(s, d).unpersist()
-    semdedupCells(s, d).unpersist()
-    v19Pairs(s, d).unpersist()
-    pqCodes(s, d).unpersist()
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact top-10 neighbors for the first 5 vectors: corpus scanned once,

@@ -71,12 +71,6 @@ object WeatherOps {
       .drop("time_diff")
   }
 
-  // ---- P11: literal parameter columns (FULL:109-113) ----------------------
-
-  def withPeriodLiterals(df: DataFrame, start: String, end: String): DataFrame =
-    df.withColumn("start_date", lit(start))
-      .withColumn("end_date", lit(end))
-
   // ---- A1: weekly average (FULL:86-94) ------------------------------------
 
   /** Group by (keys..., ISO week of `tsCol`), round(avg(valueCol), 2).

@@ -754,4 +754,26 @@ class CommitLogSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("oversized ledger"))
   }
+
+  test("schema memo stays at its bound; every read returns its rows") {
+    // more distinct file sets than the bound (subsets of 12 one-row
+    // files, k = file index): the LRU evicts instead of growing, and
+    // each read — memoized schema or freshly inferred — sees its rows
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    val t = freshDir()
+    (0 until 12).foreach(i => stage(t, s"f$i", Seq((i.toLong, "p"))))
+    val n = CommitLog.SchemaMemoBound + 8
+    assert(n < 4096)
+    (1 to n).foreach { mask =>
+      val idx = (0 until 12).filter(i => (mask >> i & 1) == 1)
+      val r = CommitLog.readFiles(spark, t, idx.map(i => s"f$i"))
+        .agg(count(lit(1)), sum("k")).head()
+      assert(r.getLong(0) == idx.size && r.getLong(1) == idx.sum,
+        s"file set $idx")
+    }
+    assert(CommitLog.schemaMemoSize == CommitLog.SchemaMemoBound)
+    // an evicted set re-infers its schema and still reads right
+    assert(CommitLog.readFiles(spark, t, Seq("f0")).count() == 1L)
+    assert(CommitLog.schemaMemoSize == CommitLog.SchemaMemoBound)
+  }
 }

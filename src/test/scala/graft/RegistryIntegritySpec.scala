@@ -1,14 +1,13 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Registry-level invariants that a Map `++` union would otherwise
   * hide: a duplicate key across two family objects silently SHADOWS
   * the earlier query — the union compiles, Verify runs, and one
-  * operator quietly disappears from the surface. No Spark session
-  * needed; this is pure map arithmetic, so it runs first and fast.
+  * operator quietly disappears from the surface. All but the last test
+  * are pure map arithmetic and need no Spark session; the last checks
+  * the hand-kept cache maps against what [[SessionMemo]] observes.
   */
-class RegistryIntegritySpec extends AnyFunSuite {
+class RegistryIntegritySpec extends SparkTestBase {
 
   private val families: Seq[(String, Map[String, _], Map[String, _])] = Seq(
     ("Reference", QueriesReference.queries, QueriesReference.oracle),
@@ -108,5 +107,31 @@ class RegistryIntegritySpec extends AnyFunSuite {
       assert(nums == expected,
         s"family '$prefix' numbering has gaps: $nums")
     }
+  }
+
+  test("every query builds only caches its sharedCachesFor entry forces") {
+    // Bench forces sharedCachesFor(selected) before timing; a cache a
+    // query builds outside that set lands its build on the query's
+    // timing (the d24 mis-attribution). Run each query of the five
+    // cache-defining families, plus every listed consumer, in a fresh
+    // session with nothing forced, and compare the registry-named memo
+    // entries it built with what the maps would force for it alone.
+    val registry = SparkEntry.sharedCaches.map(_._1).toSet
+    val names = (QueriesDedup.queries.keySet ++ QueriesText.queries.keySet ++
+      QueriesVector.queries.keySet ++ QueriesEvents.queries.keySet ++
+      QueriesGraph.queries.keySet ++
+      SparkEntry.cacheDirectConsumers.values.flatten).toSeq.sorted
+    val wrong = names.flatMap { q =>
+      val s = spark.newSession()
+      try {
+        SparkEntry.queries(q)(s, sf0001).write.format("noop")
+          .mode("overwrite").save()
+        val built = SessionMemo.names(s, sf0001).intersect(registry)
+        val forced = SparkEntry.sharedCachesFor(Set(q)).map(_._1).toSet
+        val unforced = built -- forced
+        if (unforced.isEmpty) None else Some(s"$q builds $unforced")
+      } finally SessionMemo.release(s, sf0001)
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 }

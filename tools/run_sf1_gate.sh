@@ -7,6 +7,11 @@
 # CORRECTNESS-equivalent log at tools/../SF1_GATE.log.
 #
 # Usage:  tools/run_sf1_gate.sh [--only=name1,name2]
+# Defaults are sized to the host: Spark cores and DuckDB threads from
+# nproc; the Spark driver heap from MemTotal as the tier-1 command sizes
+# it (half, 2-8 GB); DuckDB memory at half of MemTotal (the two sides
+# run one after the other). SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM,
+# DUCKDB_THREADS, DUCKDB_MEMLIMIT and DUCKDB_TEMPDIR override them.
 # Budget: ~20 min Spark side + ~75 min DuckDB side for the full
 #         registry on 32 cpus (r13 measurement). NEVER run
 #         concurrently with graft.Bench (documented ~20% inflation).
@@ -30,14 +35,19 @@ echo "[sf1-gate] $(date -u +%FT%TZ) Spark side: full registry at sf1" \
   | tee "$LOG"
 rm -rf "$OUT"
 NAMES="${ONLY#--only=}"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+CPUS="$(env -u OMP_NUM_THREADS nproc)"
+MEM_KB="$(awk '/^MemTotal:/ {print $2}' /proc/meminfo)"
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$CPUS}" \
+SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk -v k="$MEM_KB" 'BEGIN {
+  g = int(k / 2097152); print (g < 2 ? 2 : g > 8 ? 8 : g) "g" }')}" \
   sbt -batch "runMain graft.Verify $SF1 $OUT ${NAMES}" 2>&1 \
   | grep -E "\[verify\]|success|error" | tee -a "$LOG" | tail -3
 
 echo "[sf1-gate] $(date -u +%FT%TZ) DuckDB side (threads/mem capped, " \
   "temp on the big partition)" | tee -a "$LOG"
-DUCKDB_THREADS="${DUCKDB_THREADS:-28}" \
-DUCKDB_MEMLIMIT="${DUCKDB_MEMLIMIT:-90GB}" \
+DUCKDB_THREADS="${DUCKDB_THREADS:-$CPUS}" \
+DUCKDB_MEMLIMIT="${DUCKDB_MEMLIMIT:-$(awk -v k="$MEM_KB" 'BEGIN {
+  g = int(k / 2097152); print (g < 1 ? 1 : g) "GB" }')}" \
 DUCKDB_TEMPDIR="${DUCKDB_TEMPDIR:-/root/repo/benchdata/duckdb_tmp}" \
   python3 tools/check_oracle.py "$SF1" "$OUT" \
     ${ONLY:+"$ONLY"} 2>&1 | tee -a "$LOG" | tail -3
